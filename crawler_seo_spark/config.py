@@ -185,11 +185,17 @@ class CrawlConfig:
     # rounds at seen≈3×batch run ~20% faster with the filter cold).
     # Activation = seen ≥ bloom_min_seen AND seen ≥ ratio × batch;
     # 0 disables the ratio term (tests force the filter path with it).
+    # Both inputs are known at round start (the dequeue is arithmetic), so
+    # the activation backfill — like every later round's insert — runs in
+    # the background and is joined only before the next probe.
     bloom_seen_batch_ratio: float = 8.0
-    # Candidate counts at or above this use the distributed prefix-sum
-    # sequence assignment instead of a single-task window.
+    # Rounds whose dequeue size is at or above this number their new links
+    # (discovery_seq + queue_pos) with the distributed prefix-sum instead
+    # of single-task windows. It gates numbering only: the dequeue is a
+    # range filter over queue positions at every budget.
     seq_window_threshold: int = 200_000
-    # Compact (checkpoint) the lazily-unioned seen set every K rounds.
+    # Compact (checkpoint) the lazily-unioned frontier and seen set every
+    # K rounds (in-memory runs; store-mode snapshots cut lineage anyway).
     seen_compact_every: int = 8
     host_salt_buckets: int = 8  # salt fan-out for hot hosts
     checkpoint_dir: str | None = None  # enable per-round snapshots when set

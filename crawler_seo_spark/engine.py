@@ -2,34 +2,38 @@
 
 Spark lifecycle per round (SURVEY §3, north-star design)::
 
-    frontier dequeue (ORDER BY priority DESC, discovery_seq ASC LIMIT B)
-      → per-host politeness schedule (applyInPandas groups)
+    two-queue dequeue (range filter on per-class queue_pos; no ranking)
+      → per-host politeness schedule (window over host)
       → synthetic fetch (broadcast batch ⋈ page store; HTTP mapInPandas in prod)
       → Arrow-batched parse/analyze UDF (links, metatags, headings, mixed)
       → candidate links: posexplode → within-round first-occurrence dedup
       → Bloom prune + exact anti-join vs seen (J1)
       → robots admission (allow-all default = reference parity)
-      → deterministic discovery_seq assignment
+      → deterministic discovery_seq + queue_pos assignment
       → frontier/seen merge + results/filtered/metrics append
-      → (optional) snapshot commit for bit-identical resume
+      → seen-filter insert (background; joined before the next probe)
+      → (optional) snapshot commit for bit-identical resume (background)
 
 The driver loop is the only imperative control flow (BFS round barriers are
 batch-synchronous by nature — reference: core/crawler.py:61-93). Crawl order
-is reproduced EXACTLY: dequeue key ``(priority DESC, discovery_seq ASC)``
-replays the reference's two-deque FIFO (core/url_manager.py:386-404), and
-``discovery_seq`` is derived from deterministic inputs — (parent crawl_seq,
-link position on the page) within each round — never from
-``monotonically_increasing_id`` or timing.
+is reproduced EXACTLY: the frontier IS the reference's two FIFO deques
+(core/url_manager.py:386-404) — each url carries its dense position in its
+priority class's queue, the driver keeps each queue's head and tail, and a
+round dequeues the priority queue's first positions, then the normal
+queue's, up to the budget. ``discovery_seq`` and ``queue_pos`` are derived
+from deterministic inputs — (parent crawl_seq, link position on the page)
+within each round — never from ``monotonically_increasing_id`` or timing.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
-import threading
 import time
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,11 +52,11 @@ FRONTIER_SCHEMA = T.StructType([
     T.StructField("priority", T.IntegerType(), False),
     T.StructField("discovery_seq", T.LongType(), False),
     T.StructField("round_added", T.IntegerType(), False),
-])
-
-SEEN_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("url_md5", T.StringType(), False),
+    # dense FIFO position within the url's priority class: the frontier is
+    # the two reference deques, each the position range [head, tail) of
+    # its class (the driver holds the counters) — within a class,
+    # discovery_seq order IS enqueue order, so the positions are exact
+    T.StructField("queue_pos", T.LongType(), False),
 ])
 
 
@@ -120,15 +124,20 @@ class CrawlEngine:
         self.rebase_count = 0  # cooperative commit races lost (telemetry)
 
     # ------------------------------------------------------------------
-    def _seed_frontier(self) -> tuple[DataFrame, DataFrame, int]:
+    def _seed_frontier(self) -> tuple[DataFrame, DataFrame, list[int]]:
+        """Seed frontier and seen set, plus the seeds per priority class
+        (``[normal, priority]`` — the initial queue tails). The rows go
+        through Arrow in one batch into a pinned frontier; ``seen`` derives
+        from it in the JVM (``md5(url)`` IS the reference's ``url_md5``)."""
+        import pandas as pd
+
         from .functions.urlnorm import (
             canonicalize_url,
             filter_reason,
             is_priority,
-            url_md5,
         )
         raw_seeds = self.config.seed_urls or [self.config.seed_url]
-        rows, seen_rows, registered = [], [], set()
+        rows, registered, tails = [], set(), [0, 0]
         for raw in raw_seeds:
             seed = canonicalize_url(raw, None, self.base_domain)
             if seed is None or filter_reason(seed):
@@ -145,13 +154,24 @@ class CrawlEngine:
                     seed, self.config.priority_patterns)) else 0
             else:
                 prio = 1 if self.config.smart else 0
-            rows.append((seed, 0, prio, len(rows), 0))
-            seen_rows.append((seed, url_md5(seed)))
+            rows.append((seed, 0, prio, len(rows), 0, tails[prio]))
+            tails[prio] += 1
         if not rows:
             raise ValueError("no admissible seed URLs")
-        frontier = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        seen = self.spark.createDataFrame(seen_rows, SEEN_SCHEMA)
-        return frontier, seen, len(rows)
+        frontier = self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=FRONTIER_SCHEMA.fieldNames()),
+            FRONTIER_SCHEMA).localCheckpoint(eager=True)
+        return frontier, self._seen_of(frontier), tails
+
+    @staticmethod
+    def _seen_of(frontier: DataFrame) -> DataFrame:
+        return frontier.select("url", F.md5(F.col("url")).alias("url_md5"))
+
+    @staticmethod
+    def _order_of(df: DataFrame) -> DataFrame:
+        """The crawl-order projection of a round's batch or results."""
+        return df.select("crawl_seq", "url", "depth",
+                         (F.col("priority") == 1).alias("priority"), "round")
 
     def _fetch(self, batch: DataFrame) -> DataFrame:
         """Synthetic fetch, found rows only: broadcast the (small) batch into
@@ -384,22 +404,37 @@ class CrawlEngine:
         self.bloom.meta.counters["covered_round"] = round_id
         self.bloom.meta.save()
 
+    def _insert_covered(self, urls: DataFrame, round_id: int) -> None:
+        """OR ``urls`` into the seen filter, then record that it covers
+        every url through ``round_id`` (the insert thread's unit of work)."""
+        self.bloom.add_urls(urls)
+        self._mark_filter_covered(round_id)
+
+    def _publish(self, result: DataFrame, round_id: int, counters: dict,
+                 robots: DataFrame | None) -> None:
+        """Write the round's results (and live-robots state), then claim
+        its commit marker and publish the manifest."""
+        self.store.write("results", result, round_id)
+        if robots is not None:
+            self.store.write("robots", robots, round_id)
+        self.store.commit_round(round_id, counters)
+
     # ------------------------------------------------------------------
-    def _load_committed_state(self) -> dict:
+    def _load_committed_state(self) -> tuple:
         """Reconstruct the full per-round loop state from the manifest's
         committed round — the resume path, and the rebase target for a
-        cooperative writer that lost a commit race."""
+        cooperative writer that lost a commit race. Returns ``(frontier,
+        seen, results_parts, filtered_parts, order_parts, results_count,
+        next_discovery_seq, queue_heads, queue_tails, seen_count,
+        round_id)``."""
         manifest = self.store.manifest()
         last, c = manifest["round"], manifest["counters"]
         frontier = self.store.read(self.spark, "frontier", last) \
             .localCheckpoint(eager=True)
         seen = self.store.read(self.spark, "seen", last) \
             .localCheckpoint(eager=True)
-        results_parts, filtered_parts = [], []
-        for r in range(last + 1):
-            part = self.store.read(self.spark, "results", r)
-            results_parts.append(part)
-            filtered_parts.append(self._filtered_from(part))
+        results_parts = [self.store.read(self.spark, "results", r)
+                         for r in range(last + 1)]
         # live-robots state is part of the replayed inputs: without it a
         # resumed round would take the unlimited-rps fast path (breaking
         # bit-identical resume) and ignore learned Crawl-delays until the
@@ -414,14 +449,101 @@ class CrawlEngine:
                 self.spark, "robots", last).localCheckpoint(eager=True)
             self._robots_delay_count = self._robots_dynamic.filter(
                 F.col("crawl_delay").isNotNull()).count()
-        return dict(frontier=frontier, seen=seen,
-                    results_parts=results_parts,
-                    filtered_parts=filtered_parts,
-                    results_count=c["results_total"],
-                    next_discovery_seq=c["next_discovery_seq"],
-                    frontier_count=c["frontier_after"],
-                    seen_count=c["seen_total"],
-                    round_id=last + 1)
+        return (frontier, seen, results_parts,
+                [self._filtered_from(p) for p in results_parts],
+                [self._order_of(p) for p in results_parts],
+                c["results_total"], c["next_discovery_seq"],
+                list(c["queue_head"]), list(c["queue_tail"]),
+                c["seen_total"], last + 1)
+
+    @staticmethod
+    def _dequeue(frontier: DataFrame, heads: list[int], tails: list[int],
+                 budget: int, seq_base: int, round_id: int):
+        """The reference's two-deque pop (core/url_manager.py:386-404) as a
+        range filter: the priority class's first ``min(budget, n1)``
+        positions, then the normal class's first positions up to the
+        budget. No ranking job — ``crawl_seq`` is arithmetic (priority rows
+        first, each class in queue order). Returns ``(batch, remaining
+        frontier, per-class takes)``; the remaining frontier is the
+        complement filter."""
+        take1 = min(budget, tails[1] - heads[1])
+        take0 = min(budget - take1, tails[0] - heads[0])
+        prio, pos = F.col("priority") == 1, F.col("queue_pos")
+        taken = F.when(prio, pos < heads[1] + take1) \
+            .otherwise(pos < heads[0] + take0)
+        rank = F.when(prio, pos - heads[1]) \
+            .otherwise(pos - heads[0] + take1)
+        batch = (frontier.filter(taken)
+                 .withColumn("crawl_seq", (rank + seq_base).cast("long"))
+                 .withColumn("round", F.lit(round_id)))
+        return batch, frontier.filter(~taken), [take0, take1]
+
+    def _number_links(self, new_links: DataFrame, round_id: int,
+                      seq_base: int, batch_count: int, next_seq: int,
+                      tails: list[int], n_parts: int):
+        """Deterministic enqueue numbering of the round's new links:
+        ``discovery_seq`` = ``next_seq`` + rank in (parent_seq, link_pos)
+        order, and ``queue_pos`` = the class tail + rank within the url's
+        priority class (the reference appends links to its deques in
+        exactly this order). Returns ``(new frontier rows, new links per
+        class)``.
+
+        Big rounds use the distributed prefix-sum (one pinned pass yields
+        both numberings and the per-class counts); small rounds use a
+        checkpoint with the counts observed on it and one-task windows —
+        a global window would funnel millions of candidates through a
+        single reducer at the 10^10 design point.
+        """
+        cfg = self.config
+        order_cols = [F.asc("parent_seq"), F.asc("link_pos")]
+        new_links = new_links.select(
+            "url", "parent_seq", "link_pos", "parent_depth",
+            (is_priority_col(F.col("url"), cfg.priority_patterns)
+             if cfg.smart else F.lit(False)).cast("int").alias("priority"))
+        if batch_count >= cfg.seq_window_threshold:
+            # big-round regime (dequeue size is the cheap proxy for the
+            # candidate count). parent_seq is contiguous in
+            # [seq_base, seq_base + batch_count), so the order-monotone
+            # bucket is pure arithmetic — no repartitionByRange sampling
+            # job, which would re-evaluate the whole explode→dedup→prune
+            # pipeline a second time. 4× buckets per partition so hash
+            # placement stays balanced.
+            from .operators.sequence import global_sequence_arith
+            n_buckets = 4 * n_parts
+            pid = F.floor((F.col("parent_seq") - F.lit(seq_base).cast("long"))
+                          * F.lit(n_buckets) / F.lit(batch_count))
+            numbered, per_class = global_sequence_arith(
+                new_links, pid, order_cols, "discovery_seq", start=next_seq,
+                num_partitions=n_parts, with_total=True,
+                class_col="priority", class_starts=tails,
+                class_out="queue_pos")
+        else:
+            from pyspark.sql import Observation
+            obs = Observation()  # auto-named: unique across rounds/runs
+            new_links = (new_links
+                         .observe(obs, F.count(F.lit(1)).alias("n"),
+                                  F.sum("priority").alias("n1"))
+                         .localCheckpoint(eager=True))
+            n1 = int(obs.get["n1"] or 0)
+            per_class = [int(obs.get["n"]) - n1, n1]
+            tail = F.when(F.col("priority") == 1, F.lit(tails[1])) \
+                .otherwise(F.lit(tails[0])).cast("long")
+            numbered = (
+                new_links
+                .withColumn("discovery_seq",
+                            F.row_number().over(Window.orderBy(*order_cols))
+                            .cast("long") - 1 + F.lit(next_seq).cast("long"))
+                .withColumn("queue_pos",
+                            F.row_number().over(
+                                Window.partitionBy("priority")
+                                .orderBy(*order_cols)).cast("long")
+                            - 1 + tail))
+        new_frontier = (numbered
+                        .withColumn("depth",
+                                    (F.col("parent_depth") + 1).cast("int"))
+                        .withColumn("round_added", F.lit(round_id + 1))
+                        .select(*FRONTIER_SCHEMA.fieldNames()))
+        return new_frontier, per_class
 
     def run(self, resume: bool = False) -> CrawlState:
         """Run the crawl; with ``resume=True`` continue from the last
@@ -442,21 +564,14 @@ class CrawlEngine:
             # fetch; the registry persists (a dead writer keeps its slot,
             # which only makes the combined rate more conservative).
             self.store.register_writer()
-        results_parts: list[DataFrame] = []
-        filtered_parts: list[DataFrame] = []
         rounds: list[dict] = []
         n_parts = self.spark.sparkContext.defaultParallelism
-
-        pending_publish: tuple | None = None
-
-        def _join_pending() -> None:
-            nonlocal pending_publish
-            if pending_publish is not None:
-                th, errs = pending_publish
-                th.join()
-                pending_publish = None
-                if errs:
-                    raise errs[0]
+        # off the round's critical path, at most one of each in flight:
+        # the previous round's snapshot publish (store mode) and the
+        # seen-filter insert. Each is joined before anything reads what it
+        # writes — the next publish, the next probe, a filter reset, the
+        # end of the run — and re-raises its error there.
+        publish, inserts = _Background(), _Background()
 
         manifest = None
         if self.store is not None and (resume or cooperative):
@@ -468,15 +583,9 @@ class CrawlEngine:
                 self.store.recover_incomplete()
             manifest = self.store.manifest()
         if manifest is not None:
-            st = self._load_committed_state()
-            frontier, seen = st["frontier"], st["seen"]
-            results_parts, filtered_parts = (st["results_parts"],
-                                             st["filtered_parts"])
-            results_count = st["results_count"]
-            next_discovery_seq = st["next_discovery_seq"]
-            frontier_count = st["frontier_count"]
-            seen_count = st["seen_count"]
-            round_id = st["round_id"]
+            (frontier, seen, results_parts, filtered_parts, order_parts,
+             results_count, next_discovery_seq, heads, tails, seen_count,
+             round_id) = self._load_committed_state()
             # A reopened filter is only trustworthy if it covers every
             # committed round: a writer that crashed and rejoined has
             # filter state from ITS last round, but peers (or a later
@@ -506,72 +615,56 @@ class CrawlEngine:
                 self.store.reset()
             if self.bloom.n_inserted:
                 self.bloom.reset()
-            frontier, seen, n_seeds = self._seed_frontier()
-            frontier = frontier.localCheckpoint(eager=True)
-            seen = seen.localCheckpoint(eager=True)
-            results_count = 0
-            next_discovery_seq = n_seeds
-            frontier_count = n_seeds
-            seen_count = n_seeds
-            round_id = 0
+            frontier, seen, tails = self._seed_frontier()
+            results_parts, filtered_parts, order_parts = [], [], []
+            results_count = round_id = 0
+            next_discovery_seq = seen_count = sum(tails)
+            heads = [0, 0]
         bloom_active = False
 
-        while frontier_count > 0 and results_count < cfg.max_urls:
+        while sum(tails) > sum(heads) and results_count < cfg.max_urls:
             t0 = time.monotonic()
             budget = min(cfg.batch_size, cfg.max_urls - results_count)
 
-            # --- O1/O3: deterministic dequeue --------------------------------
-            # Small budgets: TakeOrderedAndProject + one-task window (the
-            # merge task holds ≤ budget rows). Large budgets: the same total
-            # order via the distributed prefix-sum — rank the frontier in
-            # (priority DESC, discovery_seq ASC) order with no single
-            # reducer, take rank < budget. Identical batch either way.
-            dequeue_order = [F.desc("priority"), F.asc("discovery_seq")]
+            # --- O1/O3: two-queue dequeue ------------------------------------
+            seq_base = results_count
+            batch, remaining, takes = self._dequeue(
+                frontier, heads, tails, budget, seq_base, round_id)
+            heads = [h + t for h, t in zip(heads, takes)]
+            batch_count = sum(takes)
             # LIVE mode fuses the whole dequeue→schedule→fetch→parse chain
             # into ONE materialization (the result checkpoint): the fused
             # kernel emits exactly one row per batch row, so the batch has
-            # a single consumer and needs no eager pin of its own — one
-            # driver barrier per round instead of two. Store mode keeps the
-            # pin: _fill_missing and the frontier delete re-consume the
-            # batch, and without the pin every result row would keep the
-            # full-frontier rank checkpoint alive (O(rounds × frontier)).
-            pin_batch = self.pages is not None
-            undequeued = None
-            if budget >= cfg.seq_window_threshold:
-                from .operators.sequence import global_sequence
-                ranked = global_sequence(frontier, dequeue_order, "_rank")
-                batch = (ranked
-                         .filter(F.col("_rank") < budget)
-                         .withColumn("crawl_seq",
-                                     (F.col("_rank") + F.lit(results_count))
-                                     .cast("long"))
-                         .drop("_rank")
-                         .withColumn("round", F.lit(round_id)))
-                # the rank's complement IS the post-dequeue frontier — a
-                # narrow filter over the same pinned ranking, replacing the
-                # per-round broadcast-anti-join of the dequeued urls
-                # against the full frontier in the in-memory merge below
-                undequeued = (ranked.filter(F.col("_rank") >= budget)
-                              .drop("_rank"))
-            else:
-                batch = (frontier.orderBy(*dequeue_order).limit(budget))
-                w = Window.orderBy(*dequeue_order)
-                batch = (batch
-                         .withColumn("crawl_seq",
-                                     F.row_number().over(w).cast("long") - 1
-                                     + F.lit(results_count).cast("long"))
-                         .withColumn("round", F.lit(round_id)))
-            if pin_batch:
-                # lazy pin: the fetch stage's broadcast build is the first
-                # consumer and materializes the checkpoint inside its own
-                # job — the pin still cuts lineage and is reused by
-                # _fill_missing and the frontier delete, without paying a
-                # separate per-round driver barrier for it
+            # a single consumer and needs no pin of its own. Store mode
+            # pins it lazily: the fetch stage's broadcast build is the
+            # first consumer and materializes the checkpoint inside its
+            # own job; _fill_missing and the crawl order reuse it.
+            if self.pages is not None:
                 batch = batch.localCheckpoint(eager=False)
-            # no count() job: the dequeue takes exactly min(budget, frontier)
-            # rows — frontier_count is exact by arithmetic (unique urls).
-            batch_count = min(budget, frontier_count)
+                order_parts.append(self._order_of(batch))
             t_dequeue = time.monotonic()
+
+            # --- seen-filter activation: decided before the round's first
+            # job, so the backfill overlaps the fetch. The Bloom prefilter
+            # is the 10^10-scale scan-saver; below the threshold its
+            # build/probe jobs cost more than the plain anti-join, so it
+            # stays cold (exactness is identical either way — the prune
+            # only bypasses join probes).
+            if (not bloom_active and seen_count >= cfg.bloom_min_seen
+                    and seen_count
+                    >= cfg.bloom_seen_batch_ratio * batch_count):
+                # backfill once — unless the reopened file-backed filter
+                # already carries state (resume path). A crash between the
+                # filter write and the round commit can leave the replayed
+                # round's urls pre-inserted: harmless (Bloom OR is
+                # idempotent; a cuckoo duplicate costs one slot and keeps
+                # prune exactness — false negatives remain impossible).
+                # `seen` is the state entering this round ⇒ the filter
+                # then covers everything through round_id - 1.
+                if self.bloom.n_inserted == 0:
+                    inserts.start(self._insert_covered, seen.select("url"),
+                                  round_id - 1)
+                bloom_active = True
 
             # --- S2: per-host politeness schedule ------------------------------
             # At "unlimited" rate budgets (≥1e8 rps — benchmark / offline
@@ -622,9 +715,14 @@ class CrawlEngine:
             # the two checkpointed sides and appended lazily (narrow ops over
             # pinned inputs — deterministic, no extra materialization job).
             if self.pages is None:
-                # LIVE: fused fetch+parse/analyze — html stays python-side
+                # LIVE: fused fetch+parse/analyze — html stays python-side.
+                # The kernel emits a row for EVERY batch url (network errors
+                # come back as status rows): no 404 fill, and the crawl
+                # order comes off the checkpointed result.
                 result_found = self._fused_live_round(
                     batch, cfg.max_depth).localCheckpoint(eager=True)
+                result = result_found
+                order_parts.append(self._order_of(result_found))
             else:
                 fetched = self._fetch(batch)
                 analyzed_cond = ((F.col("status_code") == 200)
@@ -652,17 +750,8 @@ class CrawlEngine:
                             "scheduled_offset_ms",
                             "analysis")
                 ).localCheckpoint(eager=True)
-            if self.pages is None:
-                # the fused live kernel emitted a row for EVERY batch url
-                # (network errors come back as status rows) — no 404 fill,
-                # and downstream consumers use the checkpointed result as
-                # the dequeued-url set
-                result = result_found
-            else:
                 result = result_found.unionByName(
                     self._fill_missing(batch, result_found))
-            dequeued_urls = (result_found.select("url") if self.pages is None
-                             else batch.select("url"))
             # P2 plug-in analyzers: column pipelines over the round's result
             for analyzer_fn in self.analyzers:
                 result = analyzer_fn(result)
@@ -700,25 +789,8 @@ class CrawlEngine:
                                   "_f.parent_depth"))
 
             # --- J1: bloom prune + exact anti-join, then robots -----------------
-            # The Bloom prefilter is the 10^10-scale scan-saver; below the
-            # threshold its build/probe jobs cost more than the plain
-            # anti-join, so it stays cold (exactness is identical either
-            # way — the prune only bypasses join probes).
-            if (not bloom_active and seen_count >= cfg.bloom_min_seen
-                    and seen_count
-                    >= cfg.bloom_seen_batch_ratio * batch_count):
-                # backfill once — unless the reopened file-backed filter
-                # already carries state (resume path). A crash between the
-                # filter write and the round commit can leave the replayed
-                # round's urls pre-inserted: harmless (Bloom OR is
-                # idempotent; a cuckoo duplicate costs one slot and keeps
-                # prune exactness — false negatives remain impossible).
-                if self.bloom.n_inserted == 0:
-                    self.bloom.add_urls(seen.select("url"))
-                    # `seen` here is the state entering this round ⇒ the
-                    # filter now covers everything through round_id - 1
-                    self._mark_filter_covered(round_id - 1)
-                bloom_active = True
+            inserts.join()  # the probe must read every insert so far
+            filter_inserted = self.bloom.n_inserted
             if bloom_active:
                 new_links = self.bloom.prune_new(candidates, seen)
             else:
@@ -734,132 +806,64 @@ class CrawlEngine:
             new_links = filter_allowed(new_links, self.robots)
             t_prune = time.monotonic()
 
-            # --- deterministic discovery_seq ------------------------------------
-            # Sequence = rank in (parent_seq, link_pos) order. Small rounds
-            # use a window (one task, cheap); large rounds use the
-            # distributed prefix-sum construction (repartitionByRange +
-            # per-partition offsets, operators/sequence.py) — a global
-            # window would funnel millions of candidates through a single
-            # reducer at the 10^10 design point.
-            order_cols = [F.asc("parent_seq"), F.asc("link_pos")]
-            new_links = new_links.select("url", "parent_seq", "link_pos",
-                                         "parent_depth")
-            if batch_count >= cfg.seq_window_threshold:
-                # big-round regime (dequeue size is the cheap proxy for the
-                # candidate count): ONE pinned prefix-sum pass both numbers
-                # the links and yields the enqueue count — no separate
-                # checkpoint or count job. parent_seq is contiguous in
-                # [results_count - batch_count, results_count), so the
-                # order-monotone bucket is pure arithmetic — no
-                # repartitionByRange sampling job, which would re-evaluate
-                # the whole explode→dedup→prune pipeline a second time.
-                # 4× buckets per partition so hash placement stays balanced.
-                from .operators.sequence import global_sequence_arith
-                seq_base = results_count - batch_count
-                n_buckets = 4 * n_parts
-                pid = F.floor(
-                    (F.col("parent_seq") - F.lit(seq_base).cast("long"))
-                    * F.lit(n_buckets) / F.lit(batch_count))
-                numbered, enqueued = global_sequence_arith(
-                    new_links, pid, order_cols, "discovery_seq",
-                    start=next_discovery_seq, num_partitions=n_parts,
-                    with_total=True)
-            else:
-                # small rounds: checkpoint + observed count + one-task window
-                from pyspark.sql import Observation
-                obs = Observation()  # auto-named: unique across rounds/runs
-                new_links = (new_links
-                             .observe(obs, F.count(F.lit(1)).alias("n"))
-                             .localCheckpoint(eager=True))
-                enqueued = int(obs.get["n"])
-                seq_w = Window.orderBy(*order_cols)
-                numbered = new_links.withColumn(
-                    "discovery_seq",
-                    F.row_number().over(seq_w).cast("long") - 1
-                    + F.lit(next_discovery_seq).cast("long"))
-            new_frontier = (
-                numbered
-                .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
-                .withColumn("priority",
-                            (is_priority_col(F.col("url"),
-                                             cfg.priority_patterns)
-                             if cfg.smart else F.lit(False)).cast("int"))
-                .withColumn("round_added", F.lit(round_id + 1))
-                .select("url", "depth", "priority", "discovery_seq",
-                        "round_added")
-            )
+            # --- deterministic discovery_seq + queue positions ---------------
+            new_frontier, per_class = self._number_links(
+                new_links, round_id, seq_base, batch_count,
+                next_discovery_seq, tails, n_parts)
+            tails = [t + n for t, n in zip(tails, per_class)]
+            enqueued = sum(per_class)
             next_discovery_seq += enqueued
             t_seq = time.monotonic()
 
             # --- merge frontier & seen (Iceberg MERGE INTO) --------------------
-            new_seen = new_frontier.select(
-                "url", F.md5(F.col("url")).alias("url_md5"))
+            new_seen = self._seen_of(new_frontier)
             if self.store is not None:
                 # Store mode: the table provider is the single publish
                 # path. The round's frontier/seen snapshots are produced BY
-                # the merge itself — MERGE INTO frontier (dequeued batch
-                # DELETE, new rows INSERT) and MERGE INTO seen (insert-only)
-                # — and the returned DataFrames read back from the written
-                # files: lineage is cut by storage instead of a second
-                # localCheckpoint materialization, and a resumed run
-                # continues from the exact bytes this run used.
-                # assume_disjoint invariant: new_frontier urls were pruned
-                # against seen, and frontier ⊆ seen (every enqueued url is
-                # registered the same round) — oracle-differential tested.
+                # the merge itself — MERGE INTO frontier (the dequeue's
+                # complement filter as target, new rows INSERT) and MERGE
+                # INTO seen (insert-only) — and the returned DataFrames
+                # read back from the written files: lineage is cut by
+                # storage instead of a localCheckpoint materialization, and
+                # a resumed run continues from the exact bytes this run
+                # used. assume_disjoint invariant: new_frontier urls were
+                # pruned against seen, and frontier ⊆ seen (every enqueued
+                # url is registered the same round) — oracle-differential
+                # tested.
                 frontier = self.store.merge_into(
                     self.spark, "frontier", new_frontier, on="url",
-                    round_id=round_id, target=frontier,
-                    delete_keys=dequeued_urls, assume_disjoint=True)
+                    round_id=round_id, target=remaining,
+                    assume_disjoint=True)
                 seen = self.store.merge_into(
                     self.spark, "seen", new_seen, on="url",
                     round_id=round_id, target=seen, assume_disjoint=True)
             else:
-                # In-memory mode. Big-path rounds reuse the dequeue
-                # ranking's complement (narrow filter over the pinned rank
-                # checkpoint) and leave the merged frontier LAZY: both
-                # union inputs are narrow over this round's checkpoints
-                # (rank ckpt / seq ckpt), so lineage depth stays 1, and the
-                # next round's dequeue range-shuffles the frontier anyway —
-                # materializing it here would add a full frontier
-                # shuffle+pin job per round that the dequeue immediately
-                # re-arranges (r6: measured ~0.4 s/round at the 30k-batch
-                # bench shape, removed). Small-path rounds keep the
-                # broadcast anti-join but leave the merged frontier LAZY
-                # too, compacting every seen_compact_every rounds like the
-                # seen set: between compactions the next dequeue's
-                # TakeOrdered re-evaluates ≤K stacked anti-join layers,
-                # each narrow over pinned inputs (the round's batch ckpt
-                # broadcasts, the seq ckpt unions), so lineage depth is
-                # bounded by the cadence instead of growing per round —
-                # and the per-round full-frontier shuffle+pin job is gone
-                # (r6 session 3: ~0.3 s/round at the 800-batch bench
-                # shape).
-                if undequeued is not None:
-                    frontier = undequeued.unionByName(new_frontier)
-                else:
-                    remaining = frontier.join(F.broadcast(dequeued_urls),
-                                              "url", "left_anti")
-                    frontier = remaining.unionByName(new_frontier)
-                    if (round_id + 1) % cfg.seen_compact_every == 0:
-                        frontier = (frontier.repartition(n_parts, "url")
-                                    .localCheckpoint(eager=True))
-                # seen grows as a lazy union of per-round parts — each part
-                # is narrow over an already-checkpointed round output, so
-                # lineage depth stays 1 and no extra materialization job
-                # runs; the union is compacted (checkpointed + repartitioned)
-                # periodically to bound plan size.
+                # In-memory mode: frontier and seen grow as LAZY unions of
+                # per-round parts, each narrow over an already-checkpointed
+                # round output (the frontier behind the dequeue's
+                # complement filter), so no materialization job runs per
+                # round. Every seen_compact_every rounds both are pinned to
+                # bound the stacked plan.
+                frontier = remaining.unionByName(new_frontier)
                 seen = seen.unionByName(new_seen)
                 if (round_id + 1) % cfg.seen_compact_every == 0:
+                    frontier = (frontier.coalesce(n_parts)
+                                .localCheckpoint(eager=True))
                     seen = (seen.repartition(n_parts, "url")
                             .localCheckpoint(eager=True))
-            frontier_count = frontier_count - batch_count + enqueued
             seen_count += enqueued
-            if bloom_active:
-                self.bloom.add_urls(new_frontier.select("url"))
+            # the round's urls go into the filter off the critical path;
+            # a last round's insert is skipped only when no later probe
+            # can read the filter (private temp-dir state, no snapshots)
+            last_round = (sum(tails) == sum(heads)
+                          or results_count >= cfg.max_urls)
+            if bloom_active and not (last_round and self.store is None):
                 # even if a cooperative commit race is lost below, marking
                 # this round covered is safe: the rebase path resets the
                 # filter (clearing the marker) before any reuse
-                self._mark_filter_covered(round_id)
+                inserts.start(self._insert_covered,
+                              new_frontier.select("url"), round_id)
+                filter_inserted += enqueued
             t_merge = time.monotonic()
 
             def ms(a, b):
@@ -867,11 +871,15 @@ class CrawlEngine:
 
             rounds.append({
                 "round": round_id, "dequeued": batch_count,
-                "enqueued": enqueued, "frontier_after": frontier_count,
+                "enqueued": enqueued,
+                "frontier_after": sum(tails) - sum(heads),
                 "results_total": results_count, "seen_total": seen_count,
                 "next_discovery_seq": next_discovery_seq,
+                # [normal, priority] FIFO position counters: the frontier
+                # holds exactly the positions [head, tail) of each class
+                "queue_head": heads, "queue_tail": tails,
                 "bloom_active": bloom_active,
-                "bloom_inserted": self.bloom.n_inserted,
+                "bloom_inserted": filter_inserted,
                 "bloom_rebroadcast_bytes":
                     self.bloom.last_rebroadcast_bytes,
                 "partitions": n_parts,
@@ -890,11 +898,8 @@ class CrawlEngine:
                 # overlap below would detect it one round late, wasting a
                 # second round of work per race lost)
                 try:
-                    self.store.write("results", result, round_id)
-                    if self._robots_dynamic is not None:
-                        self.store.write("robots", self._robots_dynamic,
-                                         round_id)
-                    self.store.commit_round(round_id, rounds[-1])
+                    self._publish(result, round_id, rounds[-1],
+                                  self._robots_dynamic)
                 except ConcurrentCommitError:
                     # a LIVE peer publishes the manifest within ms of the
                     # marker claim — wait for it rather than reading the
@@ -911,15 +916,11 @@ class CrawlEngine:
                     # committed state, and continue from there
                     self.store.abort_round(round_id)
                     rounds.pop()
-                    st = self._load_committed_state()
-                    frontier, seen = st["frontier"], st["seen"]
-                    results_parts = st["results_parts"]
-                    filtered_parts = st["filtered_parts"]
-                    results_count = st["results_count"]
-                    next_discovery_seq = st["next_discovery_seq"]
-                    frontier_count = st["frontier_count"]
-                    seen_count = st["seen_count"]
-                    round_id = st["round_id"]
+                    (frontier, seen, results_parts, filtered_parts,
+                     order_parts, results_count, next_discovery_seq, heads,
+                     tails, seen_count,
+                     round_id) = self._load_committed_state()
+                    inserts.join()
                     if bloom_active or self.bloom.n_inserted:
                         # the filter carries our aborted rounds' urls but
                         # may MISS urls the winner committed — a missing
@@ -931,33 +932,19 @@ class CrawlEngine:
             elif self.store is not None:
                 # frontier/seen snapshots were already published by the
                 # MERGE INTO above; the results write + commit marker run
-                # in a BACKGROUND thread overlapping the next round's
-                # dequeue (concurrent driver-thread jobs are a supported
-                # Spark pattern). Ordering: the previous round's publish is
+                # in the background, overlapping the next round's dequeue
+                # (concurrent driver-thread jobs are a supported Spark
+                # pattern). Ordering: the previous round's publish is
                 # joined before this one starts, so commits stay
                 # sequential; a crash mid-overlap leaves the previous
                 # round committed — the same consistency as before, one
                 # round-barrier cheaper per round.
-                _join_pending()
-                publish_errs: list[BaseException] = []
-
-                def _publish(res=result, rid=round_id, cnt=rounds[-1],
-                             robots=self._robots_dynamic,
-                             errs=publish_errs):
-                    try:
-                        self.store.write("results", res, rid)
-                        if robots is not None:
-                            self.store.write("robots", robots, rid)
-                        self.store.commit_round(rid, cnt)
-                    except BaseException as e:  # re-raised at next join
-                        errs.append(e)
-
-                th = threading.Thread(target=_publish, daemon=True)
-                th.start()
-                pending_publish = (th, publish_errs)
+                publish.start(self._publish, result, round_id, rounds[-1],
+                              self._robots_dynamic)
             round_id += 1
 
-        _join_pending()  # last round's overlapped publish must land
+        publish.join()  # last round's overlapped publish must land
+        inserts.join()
         if self.store is not None:
             # the returned state must outlive the store contents — a later
             # run over the same checkpoint dir may rewrite these round dirs
@@ -966,15 +953,41 @@ class CrawlEngine:
             # snapshot dir is ever overwritten).
             frontier = frontier.localCheckpoint(eager=True)
             seen = seen.localCheckpoint(eager=True)
-        results = results_parts[0]
-        for part in results_parts[1:]:
-            results = results.unionByName(part)
-        filtered = filtered_parts[0] if filtered_parts else None
-        for part in filtered_parts[1:]:
-            filtered = filtered.unionByName(part)
-        crawl_order = results.select("crawl_seq", "url", "depth",
-                                     (F.col("priority") == 1).alias("priority"),
-                                     "round")
-        return CrawlState(results=results, frontier=frontier, seen=seen,
-                          filtered=filtered, rounds=rounds,
-                          crawl_order=crawl_order)
+        return CrawlState(results=_union(results_parts), frontier=frontier,
+                          seen=seen, filtered=_union(filtered_parts),
+                          rounds=rounds, crawl_order=_union(order_parts))
+
+
+def _union(parts: list[DataFrame]) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, parts) if parts else None
+
+
+class _Background:
+    """At most one driver-side task in flight, on a
+    ``pyspark.InheritableThread`` so its jobs carry the caller's job group
+    and local properties. The task's error re-raises at :meth:`join`;
+    :meth:`start` joins the previous task first."""
+
+    def __init__(self) -> None:
+        self._thread: InheritableThread | None = None
+        self._errors: list[BaseException] = []
+
+    def start(self, fn, *args) -> None:
+        self.join()
+        errors = self._errors = []
+
+        def body():
+            try:
+                fn(*args)
+            except BaseException as e:  # re-raised at join
+                errors.append(e)
+
+        self._thread = InheritableThread(target=body, daemon=True)
+        self._thread.start()
+
+    def join(self) -> None:
+        if self._thread is not None:
+            self._thread.join()
+            self._thread = None
+            if self._errors:
+                raise self._errors[0]

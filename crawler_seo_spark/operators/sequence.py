@@ -48,28 +48,15 @@ def global_sequence(df: DataFrame, order_by: list[Column], out_col: str,
         (r["_pid"], r["n"])
         for r in arranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
         .collect())
-    if not counts:  # empty input: nothing to number
-        empty = (arranged.drop("_pid")
-                 .withColumn(out_col, F.lit(start).cast("long")))
-        return (empty, 0) if with_total else empty
     offsets, acc = {}, start
     for pid, c in counts:
         offsets[pid] = acc
         acc += c
-    # offsets and the row_number are added in LONG arithmetic — int32
-    # lit + int32 row_number would wrap (not error: this sum pre-dates the
-    # cast) when a sequence crosses 2^31, which the 10^10 design point does
-    off_expr = F.coalesce(
-        F.element_at(
-            F.map_from_arrays(
-                F.array(*[F.lit(p) for p in offsets]),
-                F.array(*[F.lit(o).cast("long") for o in offsets.values()])),
-            F.col("_pid")),
-        F.lit(0).cast("long"))
     w = Window.partitionBy("_pid").orderBy(*order_by)
     out = (arranged
            .withColumn(out_col,
-                       F.row_number().over(w).cast("long") - 1 + off_expr)
+                       F.row_number().over(w).cast("long") - 1
+                       + _offset_of(offsets, F.col("_pid")))
            .drop("_pid"))
     return (out, acc - start) if with_total else out
 
@@ -78,7 +65,10 @@ def global_sequence_arith(df: DataFrame, pid: Column,
                           order_by: list[Column], out_col: str,
                           start: int = 0,
                           num_partitions: int | None = None,
-                          with_total: bool = False):
+                          with_total: bool = False,
+                          class_col: str | None = None,
+                          class_starts: list[int] | None = None,
+                          class_out: str | None = None):
     """Prefix-sum sequence like :func:`global_sequence`, but the partition
     id is computed by ARITHMETIC instead of ``repartitionByRange``.
 
@@ -94,6 +84,13 @@ def global_sequence_arith(df: DataFrame, pid: Column,
     Correctness requirement on ``pid``: for any two rows a, b with
     ``order_by(a) < order_by(b)``, ``pid(a) <= pid(b)`` — i.e. buckets
     partition the total order into contiguous runs.
+
+    With ``class_col`` (an int column valued in ``range(len(class_starts))``)
+    each row also gets ``class_out`` = ``class_starts[c]`` + its rank among
+    the rows of its class ``c`` in the same total order — a dense per-class
+    position from the SAME pass: the count aggregate groups by
+    ``(_pid, class)`` instead of ``_pid``. ``with_total=True`` then returns
+    ``(df, per_class_counts)`` instead of ``(df, row_count)``.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     arranged = (
@@ -101,31 +98,51 @@ def global_sequence_arith(df: DataFrame, pid: Column,
           .repartition(n, "_pid")
           .localCheckpoint(eager=True)
     )
+    n_cls = len(class_starts) if class_col else 1
+    cls = F.col(class_col) if class_col else F.lit(0)
     counts = sorted(
-        (r["_pid"], r["n"])
-        for r in arranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-        .collect())
-    if not counts:
-        empty = (arranged.drop("_pid")
-                 .withColumn(out_col, F.lit(start).cast("long")))
-        return (empty, 0) if with_total else empty
+        (r["_pid"], r["_cls"], r["n"])
+        for r in arranged.groupBy("_pid", cls.alias("_cls"))
+        .agg(F.count(F.lit(1)).alias("n")).collect())
     offsets, acc = {}, start
-    for p, c in counts:
-        offsets[p] = acc
-        acc += c
-    off_expr = F.coalesce(
+    cls_offsets, cls_acc = {}, list(class_starts or [0])
+    for p, c, k in counts:
+        offsets.setdefault(p, acc)
+        acc += k
+        cls_offsets[p * n_cls + c] = cls_acc[c]
+        cls_acc[c] += k
+    w = Window.partitionBy("_pid").orderBy(*order_by)
+    out = arranged.withColumn(
+        out_col,
+        F.row_number().over(w).cast("long") - 1
+        + _offset_of(offsets, F.col("_pid")))
+    if class_col:
+        wc = Window.partitionBy("_pid", class_col).orderBy(*order_by)
+        out = out.withColumn(
+            class_out,
+            F.row_number().over(wc).cast("long") - 1
+            + _offset_of(cls_offsets, F.col("_pid") * n_cls + cls))
+    out = out.drop("_pid")
+    if not with_total:
+        return out
+    if class_col:
+        return out, [a - b for a, b in zip(cls_acc, class_starts)]
+    return out, acc - start
+
+
+def _offset_of(offsets: dict[int, int], key: Column) -> Column:
+    """``offsets[key]`` as a LONG literal-map lookup (0 for an absent key).
+    int32 lit + int32 row_number would wrap (not error) once a sequence
+    crosses 2^31, which the 10^10 design point does."""
+    if not offsets:
+        return F.lit(0).cast("long")
+    return F.coalesce(
         F.element_at(
             F.map_from_arrays(
                 F.array(*[F.lit(p) for p in offsets]),
                 F.array(*[F.lit(o).cast("long") for o in offsets.values()])),
-            F.col("_pid")),
+            key),
         F.lit(0).cast("long"))
-    w = Window.partitionBy("_pid").orderBy(*order_by)
-    out = (arranged
-           .withColumn(out_col,
-                       F.row_number().over(w).cast("long") - 1 + off_expr)
-           .drop("_pid"))
-    return (out, acc - start) if with_total else out
 
 
 def global_sequence_small(df: DataFrame, order_by: list[Column], out_col: str,

@@ -1,3 +1,4 @@
+import os
 import sys
 from pathlib import Path
 
@@ -9,7 +10,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 @pytest.fixture(scope="session")
 def spark():
     from crawler_seo_spark.session import get_spark
-    s = get_spark("crawler-seo-spark-tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("crawler-seo-spark-tests", cores=cores,
+                  shuffle_partitions=cores)
     yield s
 
 
