@@ -429,6 +429,11 @@ class CrawlEngine:
         round_id)``."""
         manifest = self.store.manifest()
         last, c = manifest["round"], manifest["counters"]
+        if "queue_head" not in c:
+            raise ValueError(
+                f"checkpoint {self.config.checkpoint_dir!r} has no frontier "
+                "queue counters (written before the two-queue frontier): "
+                "it cannot be resumed or joined; start a fresh run")
         frontier = self.store.read(self.spark, "frontier", last) \
             .localCheckpoint(eager=True)
         seen = self.store.read(self.spark, "seen", last) \
@@ -513,10 +518,8 @@ class CrawlEngine:
             pid = F.floor((F.col("parent_seq") - F.lit(seq_base).cast("long"))
                           * F.lit(n_buckets) / F.lit(batch_count))
             numbered, per_class = global_sequence_arith(
-                new_links, pid, order_cols, "discovery_seq", start=next_seq,
-                num_partitions=n_parts, with_total=True,
-                class_col="priority", class_starts=tails,
-                class_out="queue_pos")
+                new_links, pid, order_cols, "discovery_seq", "priority",
+                tails, "queue_pos", start=next_seq, num_partitions=n_parts)
         else:
             from pyspark.sql import Observation
             obs = Observation()  # auto-named: unique across rounds/runs
@@ -526,18 +529,22 @@ class CrawlEngine:
                          .localCheckpoint(eager=True))
             n1 = int(obs.get["n1"] or 0)
             per_class = [int(obs.get["n"]) - n1, n1]
-            tail = F.when(F.col("priority") == 1, F.lit(tails[1])) \
-                .otherwise(F.lit(tails[0])).cast("long")
+            # one window yields both numberings: a row's rank within its
+            # class is the running count of its class in the global order
+            w = Window.orderBy(*order_cols).rowsBetween(
+                Window.unboundedPreceding, Window.currentRow)
+            rank = F.row_number().over(w).cast("long")
+            n1_upto = F.sum("priority").over(w).cast("long")
             numbered = (
                 new_links
                 .withColumn("discovery_seq",
-                            F.row_number().over(Window.orderBy(*order_cols))
-                            .cast("long") - 1 + F.lit(next_seq).cast("long"))
+                            rank - 1 + F.lit(next_seq).cast("long"))
                 .withColumn("queue_pos",
-                            F.row_number().over(
-                                Window.partitionBy("priority")
-                                .orderBy(*order_cols)).cast("long")
-                            - 1 + tail))
+                            F.when(F.col("priority") == 1,
+                                   n1_upto - 1 + F.lit(tails[1]))
+                            .otherwise(rank - n1_upto - 1
+                                       + F.lit(tails[0]))
+                            .cast("long")))
         new_frontier = (numbered
                         .withColumn("depth",
                                     (F.col("parent_depth") + 1).cast("int"))
@@ -554,6 +561,27 @@ class CrawlEngine:
         the shared crawl: it resumes from the committed round if one
         exists, commits rounds synchronously, and on losing a commit race
         aborts its staged round and rebases onto the winner's state."""
+        # off the round's critical path, at most one of each in flight:
+        # the previous round's snapshot publish (store mode) and the
+        # seen-filter insert. Each is joined before anything reads what it
+        # writes — the next publish, the next probe, a filter reset, the
+        # end of the run — and re-raises its error there.
+        publish, inserts = _Background(), _Background()
+        try:
+            return self._crawl(resume, publish, inserts)
+        except BaseException:
+            # never leave a task running past run(): a retry over the same
+            # checkpoint dir would race it on the filter and snapshot
+            # files. The crawl's own error wins over the task's.
+            for task in (publish, inserts):
+                try:
+                    task.join()
+                except BaseException:
+                    pass
+            raise
+
+    def _crawl(self, resume: bool, publish: _Background,
+               inserts: _Background) -> CrawlState:
         cfg = self.config
         cooperative = self.store is not None and cfg.writer_id is not None
         if cooperative:
@@ -566,12 +594,6 @@ class CrawlEngine:
             self.store.register_writer()
         rounds: list[dict] = []
         n_parts = self.spark.sparkContext.defaultParallelism
-        # off the round's critical path, at most one of each in flight:
-        # the previous round's snapshot publish (store mode) and the
-        # seen-filter insert. Each is joined before anything reads what it
-        # writes — the next publish, the next probe, a filter reset, the
-        # end of the run — and re-raises its error there.
-        publish, inserts = _Background(), _Background()
 
         manifest = None
         if self.store is not None and (resume or cooperative):

@@ -63,14 +63,12 @@ def global_sequence(df: DataFrame, order_by: list[Column], out_col: str,
 
 def global_sequence_arith(df: DataFrame, pid: Column,
                           order_by: list[Column], out_col: str,
-                          start: int = 0,
-                          num_partitions: int | None = None,
-                          with_total: bool = False,
-                          class_col: str | None = None,
-                          class_starts: list[int] | None = None,
-                          class_out: str | None = None):
+                          class_col: str, class_starts: list[int],
+                          class_out: str, start: int = 0,
+                          num_partitions: int | None = None):
     """Prefix-sum sequence like :func:`global_sequence`, but the partition
-    id is computed by ARITHMETIC instead of ``repartitionByRange``.
+    id is computed by ARITHMETIC instead of ``repartitionByRange``, and
+    each row also gets a dense position within its class.
 
     ``repartitionByRange`` must first run a range-boundary *sampling job*,
     which re-evaluates the whole upstream plan once before the real
@@ -85,12 +83,11 @@ def global_sequence_arith(df: DataFrame, pid: Column,
     ``order_by(a) < order_by(b)``, ``pid(a) <= pid(b)`` — i.e. buckets
     partition the total order into contiguous runs.
 
-    With ``class_col`` (an int column valued in ``range(len(class_starts))``)
-    each row also gets ``class_out`` = ``class_starts[c]`` + its rank among
-    the rows of its class ``c`` in the same total order — a dense per-class
-    position from the SAME pass: the count aggregate groups by
-    ``(_pid, class)`` instead of ``_pid``. ``with_total=True`` then returns
-    ``(df, per_class_counts)`` instead of ``(df, row_count)``.
+    ``class_col`` is an int column valued in ``range(len(class_starts))``;
+    each row gets ``class_out`` = ``class_starts[c]`` + its rank among the
+    rows of its class ``c`` in the same total order. Both numberings come
+    from the SAME pass: the count aggregate groups by ``(_pid, class)``.
+    Returns ``(df, per_class_counts)``.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     arranged = (
@@ -98,36 +95,31 @@ def global_sequence_arith(df: DataFrame, pid: Column,
           .repartition(n, "_pid")
           .localCheckpoint(eager=True)
     )
-    n_cls = len(class_starts) if class_col else 1
-    cls = F.col(class_col) if class_col else F.lit(0)
+    n_cls = len(class_starts)
     counts = sorted(
-        (r["_pid"], r["_cls"], r["n"])
-        for r in arranged.groupBy("_pid", cls.alias("_cls"))
+        (r["_pid"], r[class_col], r["n"])
+        for r in arranged.groupBy("_pid", class_col)
         .agg(F.count(F.lit(1)).alias("n")).collect())
     offsets, acc = {}, start
-    cls_offsets, cls_acc = {}, list(class_starts or [0])
+    cls_offsets, cls_acc = {}, list(class_starts)
     for p, c, k in counts:
         offsets.setdefault(p, acc)
         acc += k
         cls_offsets[p * n_cls + c] = cls_acc[c]
         cls_acc[c] += k
     w = Window.partitionBy("_pid").orderBy(*order_by)
-    out = arranged.withColumn(
-        out_col,
-        F.row_number().over(w).cast("long") - 1
-        + _offset_of(offsets, F.col("_pid")))
-    if class_col:
-        wc = Window.partitionBy("_pid", class_col).orderBy(*order_by)
-        out = out.withColumn(
-            class_out,
-            F.row_number().over(wc).cast("long") - 1
-            + _offset_of(cls_offsets, F.col("_pid") * n_cls + cls))
-    out = out.drop("_pid")
-    if not with_total:
-        return out
-    if class_col:
-        return out, [a - b for a, b in zip(cls_acc, class_starts)]
-    return out, acc - start
+    wc = Window.partitionBy("_pid", class_col).orderBy(*order_by)
+    out = (arranged
+           .withColumn(out_col,
+                       F.row_number().over(w).cast("long") - 1
+                       + _offset_of(offsets, F.col("_pid")))
+           .withColumn(class_out,
+                       F.row_number().over(wc).cast("long") - 1
+                       + _offset_of(cls_offsets,
+                                    F.col("_pid") * n_cls
+                                    + F.col(class_col)))
+           .drop("_pid"))
+    return out, [a - b for a, b in zip(cls_acc, class_starts)]
 
 
 def _offset_of(offsets: dict[int, int], key: Column) -> Column:

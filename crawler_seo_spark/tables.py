@@ -20,9 +20,11 @@ module provides the same contract on plain parquet:
   and counters, written last — resume = read every table at the manifest's
   round (bit-identical, tested),
 * :meth:`merge_into` — the ``MERGE INTO frontier USING new_rows ON url
-  WHEN MATCHED THEN DELETE / WHEN NOT MATCHED THEN INSERT`` shape the
-  north rule names, emulated as anti-join + union over the snapshot and
-  published as the next round's snapshot.
+  WHEN NOT MATCHED THEN INSERT`` shape the north rule names, emulated as
+  anti-join + union over the snapshot and published as the next round's
+  snapshot. The rows leaving the frontier (WHEN MATCHED THEN DELETE) are
+  the caller's filter on ``target``: the engine passes the dequeue's
+  complement filter.
 
 Call sites use only this API (the ``TableProvider`` surface), so swapping
 in real Iceberg is a one-module change: ``merge_into`` becomes the SQL
@@ -38,7 +40,6 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -510,18 +511,16 @@ class SnapshotStore:
     def merge_into(self, spark: SparkSession, table: str, source: DataFrame,
                    on: str = "url", round_id: int | None = None, *,
                    target: DataFrame | None = None,
-                   delete_keys: DataFrame | None = None,
                    assume_disjoint: bool = False) -> DataFrame:
         """``MERGE INTO table USING source ON table.on = source.on
-        WHEN MATCHED (delete_keys) THEN DELETE
         WHEN NOT MATCHED THEN INSERT *`` — the north rule's frontier merge.
 
         ``target`` defaults to the latest committed snapshot (None = empty:
         the merge degenerates to an insert). The engine passes its
-        checkpointed in-memory frontier instead, avoiding a re-read of
-        state it already holds — the provider stays the single publish
-        path. ``delete_keys`` models WHEN MATCHED THEN DELETE (the dequeued
-        batch leaving the frontier). ``assume_disjoint=True`` skips the
+        in-memory frontier instead, filtered to the rows that stay (the
+        dequeued batch leaves it: WHEN MATCHED THEN DELETE), avoiding a
+        re-read of state it already holds — the provider stays the single
+        publish path. ``assume_disjoint=True`` skips the
         not-matched anti-join when the caller guarantees source keys are
         absent from the target (the engine's candidates are already pruned
         against the seen superset — an invariant the oracle-differential
@@ -534,17 +533,13 @@ class SnapshotStore:
         """
         if target is None:
             target = self.read_latest(spark, table)
-        remaining = target
-        if target is not None and delete_keys is not None:
-            remaining = target.join(F.broadcast(delete_keys.select(on)),
-                                    on, "left_anti")
-        if remaining is None:
+        if target is None:
             merged = source
         else:
             incoming = (source if assume_disjoint
-                        else source.join(remaining.select(on), on,
+                        else source.join(target.select(on), on,
                                          "left_anti"))
-            merged = remaining.unionByName(incoming)
+            merged = target.unionByName(incoming)
         if round_id is not None:
             self.write(table, merged, round_id)
             return self.read(spark, table, round_id)

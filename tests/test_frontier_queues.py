@@ -204,6 +204,54 @@ def test_insert_thread_error_surfaces_from_run(spark, pages_df,
         CrawlEngine(spark, pages_df, cfg).run()
 
 
+def test_failed_round_joins_the_insert_thread(spark, pages_df,
+                                              monkeypatch):
+    """A round that fails while an insert is in flight leaves no insert
+    running once run() has raised: a retry over the same filter state
+    must not race an orphaned writer."""
+    events, threads, lock = [], [], threading.Lock()
+    add_urls, fetch = ShardedBloom.add_urls, CrawlEngine._fetch
+    calls = []
+
+    def slow_add(self, df, url_col="url"):
+        with lock:
+            events.append("insert")
+            threads.append(threading.current_thread())
+        time.sleep(1.5)
+        add_urls(self, df, url_col)
+        with lock:
+            events.append("inserted")
+
+    def failing_fetch(self, batch):
+        calls.append(1)
+        if len(calls) == 2:  # round 1, with round 0's insert in flight
+            raise RuntimeError("fetch failed")
+        return fetch(self, batch)
+
+    monkeypatch.setattr(ShardedBloom, "add_urls", slow_add)
+    monkeypatch.setattr(CrawlEngine, "_fetch", failing_fetch)
+    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=60, batch_size=12,
+                      checkpoint_dir=tempfile.mkdtemp(prefix="queues_fail_"),
+                      **FILTER_ON)
+    with pytest.raises(RuntimeError, match="fetch failed"):
+        CrawlEngine(spark, pages_df, cfg).run()
+    assert events.count("insert") >= 2
+    assert not any(t.is_alive() for t in threads)
+    assert events.count("inserted") == events.count("insert")
+
+
+def test_resume_refuses_checkpoint_without_queue_counters(spark, pages_df):
+    """A checkpoint whose counters predate the per-class queue counters
+    fails with a clear error instead of a KeyError."""
+    ckpt = tempfile.mkdtemp(prefix="queues_old_")
+    SnapshotStore(ckpt).commit_round(0, {
+        "results_total": 10, "next_discovery_seq": 30, "seen_total": 30})
+    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=20, batch_size=10,
+                      checkpoint_dir=ckpt)
+    with pytest.raises(ValueError, match="no frontier queue counters"):
+        CrawlEngine(spark, pages_df, cfg).run(resume=True)
+
+
 @pytest.mark.parametrize("checkpoint", [False, True],
                          ids=["in-memory", "store"])
 def test_round_counters_deterministic(spark, pages_df, checkpoint):

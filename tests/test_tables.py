@@ -30,14 +30,17 @@ def test_two_writer_commit_conflict(spark, tmp_path):
 
 
 def test_merge_into_delete_and_insert(spark, tmp_path):
-    """WHEN MATCHED (delete_keys) THEN DELETE + WHEN NOT MATCHED THEN
-    INSERT over a committed snapshot, published as the next snapshot."""
+    """WHEN MATCHED THEN DELETE (the caller's filter on ``target``, as the
+    engine passes its dequeue's complement) + WHEN NOT MATCHED THEN INSERT
+    over a committed snapshot, published as the next snapshot."""
     store = SnapshotStore(str(tmp_path / "store"))
     store.write("frontier", _frontier(spark, range(10)), 0)
     store.commit_round(0, {})
+    kept = store.read(spark, "frontier", 0).filter(
+        F.col("discovery_seq") >= 3)
     merged = store.merge_into(
         spark, "frontier", _frontier(spark, range(8, 14)), on="url",
-        round_id=1, delete_keys=_frontier(spark, range(3)).select("url"))
+        round_id=1, target=kept)
     got = {r["url"]: r["discovery_seq"] for r in merged.collect()}
     # 0-2 deleted; 3-9 kept with their ORIGINAL seq; 10-13 inserted
     assert set(got) == {f"https://ex.test/u/{i}" for i in range(3, 14)}
